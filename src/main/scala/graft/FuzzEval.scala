@@ -71,10 +71,11 @@ object FuzzEval {
     lines.forEach { expr =>
       if (expr.trim.nonEmpty) {
         try {
-          // a full statement runs as-is (relational fuzzing); a bare
-          // expression wraps into a one-row SELECT (scalar fuzzing)
+          // a full statement (after any leading block comments) runs
+          // as-is (relational fuzzing); a bare expression wraps into a
+          // one-row SELECT (scalar fuzzing)
           val isStmt = expr.trim.toUpperCase
-            .matches("^(SELECT|WITH|VALUES|FROM)\\b.*")
+            .matches("^(?:/\\*.*?\\*/\\s*)*(SELECT|WITH|VALUES|FROM)\\b.*")
           val df = if (isStmt) gw.sql(expr) else gw.sql(s"SELECT ($expr) AS v")
           val t = df.schema.map(_.dataType.simpleString).mkString(",")
           val rows = df.collect()

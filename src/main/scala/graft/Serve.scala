@@ -36,7 +36,7 @@ object Serve {
     val gw = Gateway.open(spark, dataDir, attachAllow = attachAllow)
     // Gateway.open sets spark.graft.readOnly on this session, so the
     // injected GraftSqlParser (ReadOnlyGuard) rejects write/DDL statements
-    // from Thrift clients — the gateway-level check alone never sees them
+    // from Thrift and Flight clients alike — the one read-only check
     val classic = gw.session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     HiveThriftServer2.startWithSparkSession(classic, exitOnError = false)
     val flight = graft.flight.FlightServer.start(gw, flightPort)

@@ -15,8 +15,9 @@ object Dialect {
     !Character.isLetterOrDigit(c) && c != '_' && c != '.'
   }
 
-  /** Full DuckDB-dialect → Spark-SQL text rewrite, applied by the
-    * Gateway before parsing (SURVEY.md §3.5). String literals and quoted
+  /** Full DuckDB-dialect → Spark-SQL text rewrite, applied once per
+    * statement by GraftSqlParser, the session parser every entry point
+    * goes through (SURVEY.md §3.5). String literals and quoted
     * identifiers are never rewritten. Handles:
     *   - `QUALIFY pred`  →  subquery + WHERE (no Spark QUALIFY)
     *   - `a // b`        →  `a div b` (integer floor division)
@@ -58,9 +59,9 @@ object Dialect {
     * Escape PROCESSING exists only in e'…' strings, which
     * rewriteEscapeStrings has already decoded by now.
     *
-    * NOT idempotent, so it is not a `passes` member: Gateway pre-rewrites
-    * statements and the injected parser rewrites them again — this runs
-    * exactly once, in GraftSqlParser, immediately before Spark's lexer.
+    * NOT idempotent, so it is not a `passes` member: it runs exactly
+    * once, in GraftSqlParser, after `rewrite` and immediately before
+    * Spark's lexer.
     */
   private[graft] def rawifyLiterals(sql: String): String = {
     if (sql.indexOf('\\') < 0) return sql
@@ -236,17 +237,7 @@ object Dialect {
       else if (sql.charAt(i) == ',') {
         // peek past whitespace and comments only (a string literal
         // after a comma is a REAL next element)
-        var j = i + 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j < sql.length && sql.charAt(j).isWhitespace) { j += 1; moved = true }
-          if (j < sql.length &&
-              (sql.startsWith("--", j) || sql.startsWith("/*", j))) {
-            val o = consumeOpaque(sql, j, null)
-            if (o > j) { j = o; moved = true }
-          }
-        }
+        val j = skipBlank(sql, i + 1)
         val atStop =
           j >= sql.length || ")]};".contains(sql.charAt(j)) || {
             val w = new StringBuilder
@@ -437,7 +428,7 @@ object Dialect {
   }
 
   /** Split on `sep` at depth 0 (parens/brackets; quotes opaque). */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
+  private[engine] def splitTopLevel(s: String, sep: Char): Seq[String] = {
     val out = Seq.newBuilder[String]
     var depth = 0
     var last = 0
@@ -2353,16 +2344,7 @@ object Dialect {
     * (top-level comma-split args, index just past the closing paren).
     * Literal- and paren-aware.
     */
-  /** Engine-internal access for Gateway's macro expansion. */
-  private[engine] def splitCallArgsPublic(
-      sql: String, open: Int): Option[(Seq[String], Int)] =
-    splitCallArgs(sql, open)
-
-  /** Engine-internal access for Gateway's COLUMNS() expansion. */
-  private[engine] def splitTopLevelPublic(s: String, sep: Char): Seq[String] =
-    splitTopLevel(s, sep)
-
-  private def splitCallArgs(sql: String, open: Int): Option[(Seq[String], Int)] = {
+  private[engine] def splitCallArgs(sql: String, open: Int): Option[(Seq[String], Int)] = {
     var i = open
     while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
     if (i >= sql.length || sql.charAt(i) != '(') return None
@@ -2498,7 +2480,7 @@ object Dialect {
     * `/* */` block comment — copy it verbatim to `sb` (if non-null) and
     * return the index just past it; otherwise return `i0`.
     */
-  private def consumeOpaque(sql: String, i0: Int, sb: StringBuilder): Int = {
+  private[engine] def consumeOpaque(sql: String, i0: Int, sb: StringBuilder): Int = {
     val c = sql.charAt(i0)
     val end =
       if (c == '\'' || c == '"') {
@@ -2523,10 +2505,27 @@ object Dialect {
     end
   }
 
+  /** Index of the first position at or after `i` that is neither
+    * whitespace nor inside a `--` / `/* */` comment.
+    */
+  private[engine] def skipBlank(sql: String, i0: Int): Int = {
+    var i = i0
+    var moved = true
+    while (moved) {
+      moved = false
+      while (i < sql.length && sql.charAt(i).isWhitespace) { i += 1; moved = true }
+      if (i < sql.length &&
+          (sql.startsWith("--", i) || sql.startsWith("/*", i))) {
+        i = consumeOpaque(sql, i, null); moved = true
+      }
+    }
+    i
+  }
+
   /** Scan positions outside string literals, quoted identifiers, and SQL
     * comments (all copied verbatim via consumeOpaque).
     */
-  private def scanOutsideLiterals(sql: String)(f: (Int, StringBuilder) => Int): String = {
+  private[engine] def scanOutsideLiterals(sql: String)(f: (Int, StringBuilder) => Int): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < sql.length) {
@@ -3575,6 +3574,37 @@ object Dialect {
       }
     }
     -1
+  }
+
+  /** Every match of `re` that starts a word outside literals, quoted
+    * identifiers and comments, left to right and non-overlapping; with
+    * `topLevel`, only matches at paren depth 0. The scan resumes after
+    * each match, so with `topLevel` the pattern must not match parens.
+    * The keyword scanner behind the Gateway's and RecursiveSql's
+    * statement splits.
+    */
+  private[engine] def keywordMatches(sql: String, re: scala.util.matching.Regex,
+      topLevel: Boolean = true): Seq[java.util.regex.MatchResult] = {
+    val m = re.pattern.matcher(sql)
+    val out = Seq.newBuilder[java.util.regex.MatchResult]
+    var depth = 0
+    var i = 0
+    while (i < sql.length) {
+      val opaque = consumeOpaque(sql, i, null)
+      if (opaque > i) i = opaque
+      else {
+        sql.charAt(i) match {
+          case '(' => depth += 1; i += 1
+          case ')' => depth -= 1; i += 1
+          case _ if (!topLevel || depth == 0) && wordStart(sql, i) &&
+              m.region(i, sql.length).lookingAt() =>
+            out += m.toMatchResult
+            i = math.max(m.end, i + 1)
+          case _ => i += 1
+        }
+      }
+    }
+    out.result()
   }
 
   /** Translate a DuckDB/SQLite GLOB pattern to a Java regex accepted by

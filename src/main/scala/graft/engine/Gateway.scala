@@ -11,14 +11,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    execution (the reference runs every GetFlightInfo query twice,
   *    main.go:142-151 + 227-233);
   *  - statements are validated/classified BEFORE execution — write
-  *    statements are rejected with a structured error instead of being
-  *    handed to the engine raw (main.go:199-229);
+  *    statements are rejected with a structured error by the session
+  *    parser's ReadOnlyGuard instead of being handed to the engine raw
+  *    (main.go:199-229);
   *  - each Gateway owns a cloned `newSession()` so SET state is
   *    per-client, not shared process-wide (main.go:41,113-116).
   *
   * DuckDB-dialect compatibility: Dialect.rewrite text shims (QUALIFY,
-  * `//`, GLOB, `->>`) + Functions.register name shims, so DuckDB SQL in
-  * the reference's test surface runs unchanged.
+  * `//`, GLOB, `->>`, applied by the session parser) + Functions.register
+  * name shims, so DuckDB SQL in the reference's test surface runs
+  * unchanged. This class handles only the statements Spark cannot parse
+  * or answers in a different shape; its own text scans go through
+  * Dialect's lexer, so literals and comments never split or match a
+  * statement.
   */
 final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
@@ -31,16 +36,10 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     */
   @volatile private[engine] var initializing = false
 
-  /** Statements allowed in read-only mode (reference serves its DB with
-    * access_mode=read_only, main.go:61; D6/D3 of SURVEY §2.12 stay
-    * allowed like the reference's init surface).
-    */
-  private val readOnlyAllowed =
-    Seq("SELECT", "WITH", "VALUES", "SET", "RESET", "SHOW", "DESCRIBE",
-      "DESC", "EXPLAIN", "CREATE VIEW", "CREATE OR REPLACE VIEW",
-      "CREATE TEMP VIEW", "CREATE TEMPORARY VIEW",
-      "CREATE OR REPLACE TEMP VIEW", "CREATE OR REPLACE TEMPORARY VIEW",
-      "DROP VIEW", "TABLE", "FROM", "ATTACH")
+  /** DuckDB's empty `Success BOOLEAN` answer to a statement that only
+    * changes session state. */
+  private lazy val success: DataFrame =
+    session.sql("SELECT true AS Success").limit(0)
 
   private val summarizeRe = """(?is)SUMMARIZE\s+([\w.]+)\s*;?\s*""".r
   // quote marks must MATCH (backreference): INSTALL 'airport" falls
@@ -74,7 +73,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     extState(key) = (loaded, true)
     Gateway.publishExtensionsView(session, extState.toSeq.map {
       case (n, (l, i)) => (n, l, i) })
-    session.sql("SELECT true AS Success").limit(0)
+    success
   }
 
   private def loadExtension(name: String): DataFrame = extState.synchronized {
@@ -88,7 +87,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     extState(key) = (true, true)
     Gateway.publishExtensionsView(session, extState.toSeq.map {
       case (n, (l, i)) => (n, l, i) })
-    session.sql("SELECT true AS Success").limit(0)
+    success
   }
   private val pivotRe =
     ("""(?is)^PIVOT\s+([\w.]+)\s+ON\s+([\w.]+)\s+USING\s+(.+?)""" +
@@ -104,12 +103,14 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
   def sql(text: String): DataFrame = {
     val preVar = text.trim
+    // statement shapes are matched past any leading comments
+    val bare = preVar.substring(Dialect.skipBlank(preVar, 0))
     // DuckDB 1.1 session variables (SURVEY §5.3): SET VARIABLE
     // evaluates its expression EAGERLY through the full pipeline and
     // stores the result as SQL literal text; getvariable('x') is then
     // substituted before any other processing, so the literal flows
     // through raw-string doubling exactly like user-typed text.
-    preVar match {
+    bare match {
       case Gateway.setVarRe(name, ex) =>
         val df = this.sql(s"SELECT (${ex.trim.stripSuffix(";").trim}) AS v")
         val rows = df.limit(2).collect()
@@ -117,16 +118,16 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           throw new GatewayException(
             s"SET VARIABLE: expression must yield exactly one row, got ${rows.length}")
         sessionVars.put(name.toLowerCase, Gateway.varLiteral(rows.head.get(0)))
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case Gateway.resetVarRe(name) =>
         sessionVars.remove(name.toLowerCase)
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case _ =>
     }
     // current_query() reports the ORIGINAL text (pre variable
     // expansion), matching DuckDB's statement-text semantics
     val trimmed = Dialect.substituteCurrentQuery(
-      Dialect.substituteGetVariable(preVar,
+      Dialect.substituteGetVariable(bare,
         n => Option(sessionVars.get(n.toLowerCase))), preVar)
     secretStatement(trimmed) match {
       case Some(props) => return applySecret(props)
@@ -153,7 +154,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // so rejecting it was a needless divergence (GapProbe5 residual).
     trimmed match {
       case txnRe(_*) | maintRe(_*) =>
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case showAllTablesRe() =>
         return this.sql("SELECT * FROM duckdb_tables")
       // DuckDB SHOW TABLES is a single 'name' column (Spark's native
@@ -190,13 +191,13 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         // the dialect pipeline and would read `$$v$$` as a `$v` param
         prepared.put(name.toLowerCase,
           Dialect.normalizeDollarQuotes(body.trim))
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case executeRe(name, argText) =>
         return this.sql(bindPrepared(name, Option(argText)))
       case deallocRe(name) =>
         if (prepared.remove(name.toLowerCase) == null)
           throw new GatewayException(s"prepared statement not found: $name")
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case _ =>
     }
     // CREATE/DROP MACRO — session-scoped like CREATE VIEW (D6), so the
@@ -204,11 +205,11 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     trimmed match {
       case createMacroRe(name, params, table, body) =>
         defineMacro(name, params, table != null, body)
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case dropMacroRe(name) =>
         if (macros.remove(name.toLowerCase).isEmpty)
           throw new GatewayException(s"macro not found: $name")
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case _ =>
     }
     val expanded = expandColumnsExpr(expandMacros(trimmed))
@@ -220,25 +221,20 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       case _ =>
     }
     // `a UNION [ALL] BY NAME b [ORDER BY … LIMIT …]`: Spark has
-    // unionByName only in the DataFrame API — split at the top level,
-    // run each side through the full gateway path, and re-apply any
-    // trailing ORDER BY/LIMIT over the combined result.
-    splitUnionByName(expanded) match {
-      case Some((left, right, keepAll)) =>
-        val (rightBody, tail) = splitTopLevelTail(right)
-        var df = this.sql(left).unionByName(
-          this.sql(rightBody), allowMissingColumns = true)
-        if (!keepAll) df = df.distinct()
-        if (tail.isEmpty) return df
-        return session.synchronized {
-          val tmp = s"__graft_ubn_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-          df.createOrReplaceTempView(tmp)
-          try {
-            val out = session.sql(s"SELECT * FROM $tmp $tail")
-            out.queryExecution.assertAnalyzed()
-            out
-          } finally session.catalog.dropTempView(tmp)
-        }
+    // unionByName only in the DataFrame API — split at the FIRST
+    // top-level occurrence (the right side recurses, so chains fold
+    // left-associatively), run each side through the full gateway path,
+    // and re-apply any trailing ORDER BY/LIMIT over the combined result.
+    Dialect.keywordMatches(expanded, unionByNameRe).headOption match {
+      case Some(m) =>
+        val right = expanded.substring(m.end)
+        val cut = Dialect.keywordMatches(right, tailRe).headOption
+          .fold(right.length)(_.start)
+        var df = this.sql(expanded.substring(0, m.start).trim).unionByName(
+          this.sql(right.substring(0, cut).trim), allowMissingColumns = true)
+        if (m.group(1) == null) df = df.distinct()
+        val tail = right.substring(cut).trim
+        return if (tail.isEmpty) df else withTempView(df)(v => s"SELECT * FROM $v $tail")
       case None =>
     }
     // DuckDB `SUMMARIZE t` (T7 of SURVEY §2.9) → per-column stats in
@@ -292,13 +288,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
             case "parquet_kv_metadata" => parquetKvMetaDf(need)
             case _ => parquetMetadataDf(need)
           }
-          val tmp = s"graft_tvf_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-          df.createOrReplaceTempView(tmp)
-          try {
-            val out = session.sql(s"$head $tmp $tail")
-            out.queryExecution.assertAnalyzed()
-            return out
-          } finally session.catalog.dropTempView(tmp)
+          return withTempView(df)(v => s"$head $v $tail")
         case _ =>
       }
     }
@@ -331,16 +321,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       if (using.trim.toLowerCase.startsWith("count")) df = df.na.fill(0L)
       val tailText = Seq(Option(orderBy), Option(limit)).flatten
         .map(_.trim).mkString(" ")
-      if (tailText.isEmpty) return df
-      session.synchronized {
-        val tmp = s"__graft_pivot_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        df.createOrReplaceTempView(tmp)
-        try {
-          val out = session.sql(s"SELECT * FROM $tmp $tailText")
-          out.queryExecution.assertAnalyzed() // view plan inlined here
-          out
-        } finally session.catalog.dropTempView(tmp)
-      }
+      if (tailText.isEmpty) df else withTempView(df)(v => s"SELECT * FROM $v $tailText")
     }
     expanded match {
       case pivotRe(tbl, onCol, using, groupBy, orderBy, limit) =>
@@ -379,16 +360,8 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           .filter(col(valueCol).isNotNull)
         val tailText = Seq(Option(orderBy), Option(limit)).flatten
           .map(_.trim).mkString(" ")
-        if (tailText.isEmpty) return df
-        return session.synchronized {
-          val tmp = s"__graft_unpivot_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-          df.createOrReplaceTempView(tmp)
-          try {
-            val out = session.sql(s"SELECT * FROM $tmp $tailText")
-            out.queryExecution.assertAnalyzed()
-            out
-          } finally session.catalog.dropTempView(tmp)
-        }
+        return if (tailText.isEmpty) df
+          else withTempView(df)(v => s"SELECT * FROM $v $tailText")
       case _ =>
     }
     // `ATTACH 'name' (TYPE AIRPORT, location 'grpc://host:port')` — the
@@ -448,32 +421,22 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         return Seq((name, location)).toDF("attached", "location")
       case _ =>
     }
-    if (readOnly) {
-      val up = expanded.toUpperCase
-      if (!readOnlyAllowed.exists(up.startsWith)) {
-        throw new GatewayException(
-          s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
-      }
-    }
-    val rewritten = Dialect.rewrite(rewriteFileReads(expanded))
+    // Everything below reaches Spark through session.sql, whose parser
+    // (GraftSqlParser) applies the dialect rewrite and the read-only
+    // guard exactly once per statement.
+    val stmt = rewriteFileReads(expanded)
     // WITH RECURSIVE … UNION (bare): DuckDB-dialect dedup recursion.
     // Spark 4.1's native recursive CTE covers only UNION ALL, so the
     // bare-UNION shape routes through the engine's semi-naive fixpoint
     // (Recursive.fixpoint — identical semantics: each round's working
     // table is the new distinct rows). UNION ALL recursion falls
     // through to the native path untouched.
-    if (RecursiveSql.isRecursive(rewritten)) {
+    if (RecursiveSql.isRecursive(stmt)) {
       val parsed =
-        try RecursiveSql.parse(rewritten)
+        try RecursiveSql.parse(stmt)
         catch { case _: IllegalArgumentException => None }
       parsed match {
         case Some(p) if RecursiveSql.needsFixpoint(p) =>
-          if (readOnly) {
-            val up = p.outer.toUpperCase
-            if (!readOnlyAllowed.exists(up.startsWith))
-              throw new GatewayException(
-                s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
-          }
           return RecursiveSql.run(session, p)
         case _ => // native parser handles it (or reports the real error)
       }
@@ -482,23 +445,45 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // rows). Inherently two-pass (DuckDB materializes and counts
     // internally too): run the body, count, limit. The count is one
     // aggregate job, not a collect.
-    pctLimitRe.findFirstMatchIn(rewritten) match {
-      case Some(m) =>
-        val base = session.sql(m.group(1).trim)
+    percentLimit(stmt) match {
+      case Some((body, pct)) =>
+        val base = session.sql(body)
         base.queryExecution.assertAnalyzed()
-        val k = math.floor(base.count() * m.group(2).toDouble / 100.0).toLong
+        val k = math.floor(base.count() * pct / 100.0).toLong
         return base.limit(math.min(math.max(0L, k), Int.MaxValue.toLong).toInt)
       case None =>
     }
-    val df = session.sql(rewritten)
+    val df = session.sql(stmt)
     df.queryExecution.assertAnalyzed() // structured failure before execution
     df
   }
 
-  // `… LIMIT n%` at statement end ('%' is unambiguous there: a modulo
-  // expression cannot terminate a LIMIT clause followed by nothing)
-  private val pctLimitRe =
-    """(?is)^(.*\s)LIMIT\s+(\d+(?:\.\d+)?)\s*%\s*;?\s*$""".r
+  /** Run `stmt(view)` over `df` registered as a temp view that lives
+    * only while the statement is analyzed (analysis inlines the view's
+    * plan). Synchronized per session: the view namespace is shared. */
+  private def withTempView(df: DataFrame)(stmt: String => String): DataFrame =
+    session.synchronized {
+      val view = s"__graft_tmp_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+      df.createOrReplaceTempView(view)
+      try {
+        val out = session.sql(stmt(view))
+        out.queryExecution.assertAnalyzed()
+        out
+      } finally session.catalog.dropTempView(view)
+    }
+
+  private val unionByNameRe = """(?i)UNION\s+(ALL\s+)?BY\s+NAME\b""".r
+  private val tailRe = """(?i)(?:ORDER\s+BY|LIMIT)\b""".r
+  private val pctLimitRe = """(?i)LIMIT\s+(\d+(?:\.\d+)?)\s*%""".r
+
+  /** `… LIMIT n%` closing the statement → (body, n). '%' is unambiguous
+    * there: a modulo expression cannot end a statement's LIMIT clause. */
+  private def percentLimit(sql: String): Option[(String, Double)] =
+    Dialect.keywordMatches(sql, pctLimitRe).lastOption.filter { m =>
+      val end = Dialect.skipBlank(sql, m.end)
+      end == sql.length ||
+        sql.charAt(end) == ';' && Dialect.skipBlank(sql, end + 1) == sql.length
+    }.map(m => (sql.substring(0, m.start), m.group(1).toDouble))
 
   // ---- DuckDB direct-file queries ------------------------------------
   // `FROM 'path.parquet'` / `FROM read_parquet('path')` /
@@ -508,11 +493,12 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   // `SELECT nation.n_name FROM 'nation.parquet'` resolves), falling
   // back to a hashed name on collision. Glob paths work — Spark's
   // readers accept them natively.
-  private val fileFromRe =
-    """(?i)\b(FROM|JOIN)\s+'([^']+\.(?:parquet|pq|csv|tsv|json|jsonl|ndjson)(?:\.gz)?)'""".r
-  private val readFnHeadRe =
-    ("""(?i)\b(FROM|JOIN)\s+(?:read_(parquet|csv_auto|csv|json_auto|json""" +
-      """|ndjson_auto|ndjson|text|blob)|(parquet_scan))\s*(?=\()""").r
+  private val fromJoinRe = """(?i)(FROM|JOIN)\s+""".r
+  private val fileRe =
+    """'([^']+\.(?:parquet|pq|csv|tsv|json|jsonl|ndjson)(?:\.gz)?)'""".r
+  private val readFnRe =
+    ("""(?i)(?:read_(parquet|csv_auto|csv|json_auto|json""" +
+      """|ndjson_auto|ndjson|text|blob)|parquet_scan)\s*(?=\()""").r
 
   private val fileViews = scala.collection.mutable.HashMap.empty[String, String]
 
@@ -658,95 +644,77 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       })
     }
 
+  /** Replace each DuckDB file read or table function after FROM/JOIN,
+    * outside literals and comments, with the relation that serves it. */
   private def rewriteFileReads(sql: String): String = {
-    // read_xxx(…) calls: full argument split (options carry nested
-    // ['lists'] and {'structs'} a [^)]* regex mis-scans)
-    val viaFn = {
-      val out = new StringBuilder
-      var last = 0
-      val ms = readFnHeadRe.findAllMatchIn(sql).toSeq
-      for (m <- ms) {
-        if (m.start >= last) {
-          Dialect.splitCallArgsPublic(sql, m.end) match {
-            case Some((args, end)) if args.nonEmpty =>
-              val kind = Option(m.group(2)).getOrElse("parquet")
-                .toLowerCase match {
-                case "csv_auto" | "csv" => "csv"
-                case "json_auto" | "json" | "ndjson_auto" | "ndjson" => "json"
-                case "text" => "text"
-                case "blob" => "blob"
-                case _ => "parquet" // read_parquet and the parquet_scan alias
-              }
-              val litRe = """'((?:[^']|'')*)'""".r
-              // splitCallArgs tracks parens but not {}/[]: re-merge args
-              // the columns={'a':'T','b':'U'} struct and ['p1','p2']
-              // list forms split at their inner commas (quote-aware
-              // balance count)
-              def braceBalance(s: String): Int = {
-                var d = 0; var i = 0; var inQ = false
-                while (i < s.length) {
-                  val c = s.charAt(i)
-                  if (inQ) { if (c == '\'') inQ = false }
-                  else if (c == '\'') inQ = true
-                  else if (c == '{' || c == '[') d += 1
-                  else if (c == '}' || c == ']') d -= 1
-                  i += 1
-                }
-                d
-              }
-              val merged = args.foldLeft(List.empty[String]) { (acc, a) =>
-                acc match {
-                  case h :: t if braceBalance(h) > 0 => (h + "," + a) :: t
-                  case _ => a :: acc
-                }
-              }.reverse
-              val paths = {
-                val a0 = merged.head.trim
-                if (a0.startsWith("["))
-                  litRe.findAllMatchIn(a0).map(_.group(1)).toSeq
-                else litRe.findPrefixMatchOf(a0).map(_.group(1)).toSeq
-              }
-              val optRe = """(?s)^\s*([A-Za-z_]+)\s*=\s*(.*)$""".r
-              val opts = merged.tail.flatMap {
-                case optRe(k, v) => Some(k.toLowerCase -> v.trim)
-                case _ => None
-              }
-              if (paths.isEmpty || opts.length != merged.tail.length) {
-                // non-literal path or unrecognized arg shape: leave the
-                // call text as-is (it will surface a resolution error
-                // naming the function, not silently mis-read)
-                out.append(sql.substring(last, end)); last = end
-              } else {
-                out.append(sql.substring(last, m.start))
-                out.append(s"${m.group(1)} ${fileView(paths, Some(kind), opts)}")
-                last = end
-              }
-            case _ => // not a call — leave untouched
-          }
-        }
+    val out = new StringBuilder
+    var last = 0
+    for (m <- Dialect.keywordMatches(sql, fromJoinRe, topLevel = false)
+        if m.start >= last)
+      fileRelation(sql, m.end).foreach { case (relation, end) =>
+        out.append(sql.substring(last, m.start)).append(m.group(1))
+          .append(' ').append(relation)
+        last = end
       }
-      out.append(sql.substring(last)).toString
+    if (last == 0) sql else out.append(sql.substring(last)).toString
+  }
+
+  /** The relation for a file read or table function starting at `at`,
+    * and the index just past it. */
+  private def fileRelation(sql: String, at: Int): Option[(String, Int)] = {
+    def prefix(re: scala.util.matching.Regex) = {
+      val m = re.pattern.matcher(sql).region(at, sql.length)
+      if (m.lookingAt()) Some(m) else None
     }
-    // glob('pattern') table function: one `file` column, driver-side
-    // Hadoop FS listing (works for local paths and any configured
-    // remote FS), memoized per pattern like the file views
-    val viaGlob = globFnRe.replaceAllIn(viaFn, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} ${globView(m.group(2))}"))
-    // FROM pragma_version() → the registered one-row view
-    val viaPragma = pragmaVersionFnRe.replaceAllIn(viaGlob,
-      m => s"${m.group(1)} graft_pragma_version")
-    // FROM repeat('s', n): n rows of 's', column named by the value
-    // (DuckDB's repeat table function — r10 audit)
-    val viaRepeat = repeatFnRe.replaceAllIn(viaPragma, m => {
-      val s = m.group(2)
-      val colName = s.replace("''", "'").replace("`", "")
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} (SELECT '$s' AS `$colName` FROM range(${m.group(3)}))")
-    })
-    fileFromRe.replaceAllIn(viaRepeat, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} ${fileView(Seq(m.group(2)), None, Nil)}"))
+    prefix(readFnRe).flatMap(readCall(sql, _))
+      // glob('pattern') table function: one `file` column, driver-side
+      // Hadoop FS listing (works for local paths and any configured
+      // remote FS), memoized per pattern like the file views
+      .orElse(prefix(globFnRe).map(m => (globView(m.group(1)), m.end)))
+      // FROM pragma_version() → the registered one-row view
+      .orElse(prefix(pragmaVersionFnRe).map(m => ("graft_pragma_version", m.end)))
+      // FROM repeat('s', n): n rows of 's', column named by the value
+      // (DuckDB's repeat table function — r10 audit)
+      .orElse(prefix(repeatFnRe).map { m =>
+        val s = m.group(1)
+        val colName = s.replace("''", "'").replace("`", "")
+        (s"(SELECT '$s' AS `$colName` FROM range(${m.group(2)}))", m.end)
+      })
+      .orElse(prefix(fileRe).map(m =>
+        (fileView(Seq(m.group(1)), None, Nil), m.end)))
+  }
+
+  /** read_xxx(…) calls: full argument split (options carry nested
+    * ['lists'] and {'structs'} a [^)]* regex mis-scans). A non-literal
+    * path or unrecognized argument shape keeps the call text, which
+    * then surfaces a resolution error naming the function. */
+  private def readCall(
+      sql: String, m: java.util.regex.Matcher): Option[(String, Int)] = {
+    val kind = Option(m.group(1)).getOrElse("parquet").toLowerCase match {
+      case "csv_auto" | "csv" => "csv"
+      case "json_auto" | "json" | "ndjson_auto" | "ndjson" => "json"
+      case "text" => "text"
+      case "blob" => "blob"
+      case _ => "parquet" // read_parquet and the parquet_scan alias
+    }
+    Dialect.splitCallArgs(sql, m.end).flatMap { case (_, end) =>
+      // m.end is the call's '('; split at depth 0 of ()/[]/{}
+      val args = Dialect.splitTopLevel(sql.substring(m.end + 1, end - 1), ',')
+      val litRe = """'((?:[^']|'')*)'""".r
+      val paths = {
+        val a0 = args.head.trim
+        if (a0.startsWith("["))
+          litRe.findAllMatchIn(a0).map(_.group(1)).toSeq
+        else litRe.findPrefixMatchOf(a0).map(_.group(1)).toSeq
+      }
+      val optRe = """(?s)^\s*([A-Za-z_]+)\s*=\s*(.*)$""".r
+      val opts = args.tail.flatMap {
+        case optRe(k, v) => Some(k.toLowerCase -> v.trim)
+        case _ => None
+      }
+      if (paths.isEmpty || opts.length != args.tail.length) None
+      else Some((fileView(paths, Some(kind), opts), end))
+    }
   }
 
   /** Parquet footer introspection (DuckDB's parquet_schema/metadata
@@ -858,12 +826,10 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     } finally r.close()
   }
 
-  private val globFnRe =
-    """(?i)\b(FROM|JOIN)\s+glob\s*\(\s*'([^']+)'\s*\)""".r
-  private val pragmaVersionFnRe =
-    """(?i)\b(FROM|JOIN)\s+pragma_version\s*\(\s*\)""".r
+  private val globFnRe = """(?i)glob\s*\(\s*'([^']+)'\s*\)""".r
+  private val pragmaVersionFnRe = """(?i)pragma_version\s*\(\s*\)""".r
   private val repeatFnRe =
-    """(?i)\b(FROM|JOIN)\s+repeat\s*\(\s*'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)""".r
+    """(?i)repeat\s*\(\s*'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)""".r
 
   private def globView(pattern: String): String = session.synchronized {
     fileViews.getOrElseUpdate("glob::" + pattern, {
@@ -919,7 +885,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     val body = Option(prepared.get(name.toLowerCase)).getOrElse(
       throw new GatewayException(s"prepared statement not found: $name"))
     val args: Seq[String] = argList.map { at =>
-      Dialect.splitCallArgsPublic("(" + at + ")", 0) match {
+      Dialect.splitCallArgs("(" + at + ")", 0) match {
         case Some((as, _)) => as.map(_.trim).filter(_.nonEmpty)
         case None =>
           throw new GatewayException(s"EXECUTE $name: malformed argument list")
@@ -966,86 +932,70 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     * macro hygiene, same effect as DuckDB's expression binding).
     */
   private def substituteParams(
-      body: String, bind: Map[String, String]): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < body.length && body.charAt(j) != c) j += 1
-        sb.append(body.substring(i, math.min(j + 1, body.length)))
-        i = j + 1
-      } else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < body.length &&
-          (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j += 1
-        val word = body.substring(i, j)
-        sb.append(bind.get(word.toLowerCase).map(v => s"($v)").getOrElse(word))
-        i = j
-      } else { sb.append(c); i += 1 }
+      body: String, bind: Map[String, String]): String =
+    mapWords(body) { (i, j) =>
+      bind.get(body.substring(i, j).toLowerCase).map(v => (s"($v)", j))
     }
-    sb.toString
+
+  /** Rewrite the identifier words of `sql` that lie outside literals,
+    * quoted identifiers and comments: `f(start, end)` returns the
+    * replacement text and the index to resume at, or None to keep the
+    * word. */
+  private def mapWords(sql: String)(
+      f: (Int, Int) => Option[(String, Int)]): String = {
+    def identChar(k: Int) =
+      sql.charAt(k).isLetterOrDigit || sql.charAt(k) == '_'
+    Dialect.scanOutsideLiterals(sql) { (i, sb) =>
+      val c = sql.charAt(i)
+      if ((c.isLetter || c == '_') && (i == 0 || !identChar(i - 1))) {
+        var j = i
+        while (j < sql.length && identChar(j)) j += 1
+        val (text, end) = f(i, j).getOrElse((sql.substring(i, j), j))
+        sb.append(text)
+        end
+      } else i
+    }
   }
 
   private def expandMacros(sql: String): String = {
     if (macros.isEmpty) return sql
+    // expanded bodies and arguments may call macros again: re-scan until
+    // nothing changes, within a per-statement expansion budget that
+    // bounds recursive macros
+    var budget = 16
     var cur = sql
-    var depth = 0
-    var changed = true
-    while (changed && depth < 16) {
-      changed = false
-      depth += 1
-      var i = 0
-      var out: String = null
-      while (i < cur.length && out == null) {
-        val c = cur.charAt(i)
-        if (c == '\'' || c == '"') {
-          var j = i + 1
-          while (j < cur.length && cur.charAt(j) != c) j += 1
-          i = j + 1
-        } else if ((c.isLetter || c == '_') &&
-            (i == 0 || !(cur.charAt(i - 1).isLetterOrDigit ||
-              cur.charAt(i - 1) == '_' || cur.charAt(i - 1) == '.'))) {
-          var j = i
-          while (j < cur.length &&
-            (cur.charAt(j).isLetterOrDigit || cur.charAt(j) == '_')) j += 1
-          val word = cur.substring(i, j).toLowerCase
-          macros.get(word) match {
-            case Some(m) if j < cur.length && {
-                var k = j
-                while (k < cur.length && cur.charAt(k).isWhitespace) k += 1
-                k < cur.length && cur.charAt(k) == '(' } =>
-              var k = j
-              while (cur.charAt(k) != '(') k += 1
-              Dialect.splitCallArgsPublic(cur, k) match {
-                case Some((args, end)) =>
-                  val (named, pos) = args.map(_.trim).filter(_.nonEmpty)
-                    .partition(_.matches("(?s)\\w+\\s*:=.*"))
-                  require(pos.length == m.positional.length,
-                    s"macro $word expects ${m.positional.length} positional " +
-                      s"argument(s), got ${pos.length}")
-                  val namedBind = named.map { a =>
-                    val Array(k0, v0) = a.split(":=", 2)
-                    (k0.trim.toLowerCase, v0.trim)
-                  }.toMap
-                  val bind =
-                    m.positional.map(_.toLowerCase).zip(pos).toMap ++
-                      m.defaults.map { case (k0, dflt) =>
-                        k0.toLowerCase -> namedBind.getOrElse(k0.toLowerCase, dflt)
-                      }.toMap
-                  val bodyExpanded = substituteParams(m.body, bind)
-                  out = cur.substring(0, i) + "(" + bodyExpanded + ")" +
-                    cur.substring(end)
-                case None => i = j
-              }
-            case _ => i = j
-          }
-        } else i += 1
+    var prev = ""
+    while (cur != prev && budget > 0) {
+      prev = cur
+      val text = cur
+      cur = mapWords(text) { (i, j) =>
+        val word = text.substring(i, j).toLowerCase
+        macros.get(word).filter(_ => budget > 0 && (i == 0 || text.charAt(i - 1) != '.'))
+          .flatMap(m => Dialect.splitCallArgs(text, j).map { case (args, end) =>
+            budget -= 1
+            ("(" + substituteParams(m.body, macroBind(word, m, args)) + ")", end)
+          })
       }
-      if (out != null) { cur = out; changed = true }
     }
     cur
+  }
+
+  /** Parameter name → argument text for one call of macro `m`. */
+  private def macroBind(
+      word: String, m: SqlMacro, args: Seq[String]): Map[String, String] = {
+    val (named, pos) = args.map(_.trim).filter(_.nonEmpty)
+      .partition(_.matches("(?s)\\w+\\s*:=.*"))
+    require(pos.length == m.positional.length,
+      s"macro $word expects ${m.positional.length} positional " +
+        s"argument(s), got ${pos.length}")
+    val namedBind = named.map { a =>
+      val Array(k0, v0) = a.split(":=", 2)
+      (k0.trim.toLowerCase, v0.trim)
+    }.toMap
+    m.positional.map(_.toLowerCase).zip(pos).toMap ++
+      m.defaults.map { case (k0, dflt) =>
+        k0.toLowerCase -> namedBind.getOrElse(k0.toLowerCase, dflt)
+      }.toMap
   }
 
   // ---- COLUMNS() star expression -------------------------------------
@@ -1057,15 +1007,20 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   // than in the stateless Dialect: supported when the first top-level
   // FROM names a catalog relation; other shapes pass through (and fail
   // with the parser's unresolved-COLUMNS error).
-  private val columnsCallRe = """(?i)\bCOLUMNS\s*\(""".r
-  private val fromIdentRe = """(?i)\bFROM\s+([\w.]+)""".r
+  private val columnsCallRe = """(?i)COLUMNS\s*\(""".r
+  private val selectRe = """(?i)SELECT\b""".r
+  private val fromRe = """(?i)FROM\b""".r
+  private val fromIdentRe = """(?i)FROM\s+([\w.]+)""".r
 
   private def expandColumnsExpr(sql: String): String = {
     if (!sql.toUpperCase.contains("COLUMNS")) return sql
-    val selAt = sql.toUpperCase.indexOf("SELECT")
-    if (selAt < 0) return sql
-    val fromAt = topLevelKeywordIndex(sql, "FROM")
-    if (fromAt < 0) return sql
+    val (listStart, fromAt) =
+      (Dialect.keywordMatches(sql, selectRe).headOption,
+        Dialect.keywordMatches(sql, fromRe).headOption) match {
+        case (Some(sel), Some(from)) if sel.end <= from.start =>
+          (sel.end, from.start)
+        case _ => return sql
+      }
     val table = fromIdentRe.findPrefixMatchOf(sql.substring(fromAt)) match {
       case Some(m) => m.group(1)
       case None => return sql
@@ -1073,13 +1028,14 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     val schema =
       try session.table(table).schema
       catch { case _: Exception => return sql }
-    val listStart = selAt + "SELECT".length
     val selectList = sql.substring(listStart, fromAt)
-    if (!columnsCallRe.findFirstIn(selectList).isDefined) return sql
-    val items = Dialect.splitTopLevelPublic(selectList, ',').map { item =>
-      columnsCallRe.findFirstMatchIn(item) match {
+    def columnsCall(item: String) =
+      Dialect.keywordMatches(item, columnsCallRe, topLevel = false).headOption
+    if (columnsCall(selectList).isEmpty) return sql
+    val items = Dialect.splitTopLevel(selectList, ',').map { item =>
+      columnsCall(item) match {
         case Some(m) =>
-          Dialect.splitCallArgsPublic(item, m.end - 1) match {
+          Dialect.splitCallArgs(item, m.end - 1) match {
             case Some((args, end)) if args.length == 1 =>
               val arg = args.head.trim
               val names: Seq[String] =
@@ -1113,29 +1069,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     }
     sql.substring(0, listStart) + " " + items.mkString(", ").trim + " " +
       sql.substring(fromAt)
-  }
-
-  /** First depth-0 keyword occurrence outside literals. */
-  private def topLevelKeywordIndex(sql: String, kw: String): Int = {
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && sql.regionMatches(true, i, kw, 0, kw.length) &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit) &&
-            (i + kw.length >= sql.length ||
-              !sql.charAt(i + kw.length).isLetterOrDigit)) return i
-        i += 1
-      }
-    }
-    -1
   }
 
   // ---- PRAGMA / SHOW <table> -----------------------------------------
@@ -1266,66 +1199,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       "extra")
   }
 
-  // ---- UNION [ALL] BY NAME -------------------------------------------
-  /** Split at the FIRST top-level `UNION [ALL] BY NAME`; the right side
-    * recurses through gateway sql, so chains fold left-associatively.
-    */
-  private val unionByNameRe = """(?i)^UNION\s+(ALL\s+)?BY\s+NAME\b""".r
-
-  private def splitUnionByName(sql: String): Option[(String, String, Boolean)] = {
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'U' || c == 'u') &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit)) {
-          unionByNameRe.findPrefixMatchOf(sql.substring(i)) match {
-            case Some(m) =>
-              return Some((sql.substring(0, i).trim,
-                sql.substring(i + m.end).trim, m.group(1) != null))
-            case None =>
-          }
-        }
-        i += 1
-      }
-    }
-    None
-  }
-
-  /** Split a trailing top-level `ORDER BY …` / `LIMIT …` off a query
-    * body (so it can re-apply over a combined DataFrame).
-    */
-  private def splitTopLevelTail(sql: String): (String, String) = {
-    var depth = 0
-    var i = 0
-    var cut = -1
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && cut < 0 &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit)) {
-          if (sql.regionMatches(true, i, "ORDER", 0, 5) ||
-              sql.regionMatches(true, i, "LIMIT", 0, 5)) cut = i
-        }
-        i += 1
-      }
-    }
-    if (cut < 0) (sql, "") else (sql.substring(0, cut).trim, sql.substring(cut).trim)
-  }
-
   private val secretRe =
     """(?is)CREATE\s+(?:OR\s+REPLACE\s+)?(?:PERSISTENT\s+)?SECRET\s*(?:\w+\s*)?\(\s*(.*)\)\s*;?\s*""".r
   private val secretPropRe =
@@ -1370,7 +1243,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       props.get("url_style").foreach(v =>
         set("fs.s3a.path.style.access", (v.toLowerCase == "path").toString))
     }
-    session.sql("SELECT true AS Success").limit(0)
+    success
   }
 
   /** Result schema without executing — the fix for the reference's
@@ -1438,18 +1311,16 @@ object Gateway {
         " (scalar variables only)")
   }
 
-  /** Substitute prepared-statement placeholders with argument SQL text,
-    * outside string literals: `$1`-style positionals, `$name` named
-    * parameters, and `?` in left-to-right order. Each value is
-    * parenthesized (textual binding hygiene, like macro expansion).
-    * Shared by EXECUTE and the Flight prepared-statement path.
+  /** Substitute prepared-statement placeholders with argument SQL text:
+    * `$1`-style positionals, `$name` named parameters, and `?` in
+    * left-to-right order. Each value is parenthesized (textual binding
+    * hygiene, like macro expansion). Shared by EXECUTE and the Flight
+    * prepared-statement path.
     */
   private[graft] def bindPlaceholders(
       body: String,
       positional: Seq[String],
       named: Map[String, String]): String = {
-    val sb = new StringBuilder
-    var i = 0
     var qmark = 0
     def positionalAt(n: Int, what: String): String = {
       if (n < 1 || n > positional.length)
@@ -1458,39 +1329,43 @@ object Gateway {
             s"supplied ${positional.length} argument(s)")
       s"(${positional(n - 1)})"
     }
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < body.length && body.charAt(j) != c) j += 1
-        sb.append(body.substring(i, math.min(j + 1, body.length)))
-        i = j + 1
-      } else if (c == '$' && i + 1 < body.length &&
-          body.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < body.length && body.charAt(j).isDigit) j += 1
-        sb.append(positionalAt(body.substring(i + 1, j).toInt,
-          body.substring(i, j)))
-        i = j
-      } else if (c == '$' && i + 1 < body.length &&
-          (body.charAt(i + 1).isLetter || body.charAt(i + 1) == '_')) {
-        var j = i + 1
-        while (j < body.length &&
-          (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j += 1
-        val name = body.substring(i + 1, j).toLowerCase
-        named.get(name) match {
-          case Some(v) => sb.append(s"($v)")
-          case None => throw new GatewayException(
-            s"prepared statement parameter $$$name was not supplied")
-        }
-        i = j
-      } else if (c == '?') {
-        qmark += 1
-        sb.append(positionalAt(qmark, "?"))
-        i += 1
-      } else { sb.append(c); i += 1 }
+    mapPlaceholders(body) { p =>
+      if (p == "?") { qmark += 1; positionalAt(qmark, "?") }
+      else if (p.charAt(1).isDigit) positionalAt(p.substring(1).toInt, p)
+      else {
+        val name = p.substring(1).toLowerCase
+        s"(${named.getOrElse(name, throw new GatewayException(
+          s"prepared statement parameter $$$name was not supplied"))})"
+      }
     }
-    sb.toString
+  }
+
+  /** Positional parameters a prepared statement expects: the highest
+    * `$N`, or the number of `?` if that is larger. */
+  private[graft] def placeholderCount(body: String): Int = {
+    var maxD = 0
+    var qs = 0
+    mapPlaceholders(body) { p =>
+      if (p == "?") qs += 1
+      else if (p.charAt(1).isDigit) maxD = math.max(maxD, p.substring(1).toInt)
+      p
+    }
+    math.max(maxD, qs)
+  }
+
+  private val placeholderRe = """\?|\$(?:\d+|[A-Za-z_]\w*)""".r
+
+  /** The one placeholder scanner: map each `?`, `$N` and `$name` outside
+    * literals, quoted identifiers and comments through `f`. */
+  private def mapPlaceholders(body: String)(f: String => String): String = {
+    val m = placeholderRe.pattern.matcher(body)
+    Dialect.scanOutsideLiterals(body) { (i, sb) =>
+      val c = body.charAt(i)
+      if ((c == '?' || c == '$') && m.region(i, body.length).lookingAt()) {
+        sb.append(f(m.group()))
+        m.end
+      } else i
+    }
   }
 
   /** Catalog introspection views named after DuckDB's table functions
@@ -1746,6 +1621,12 @@ object Gateway {
       initScript: Option[String] = None,
       attachAllow: Seq[String] = Nil): Gateway = {
     val sess = spark.newSession()
+    // every statement's dialect rewrite and read-only check happen in
+    // the injected parser: without it the gateway would serve raw,
+    // unguarded Spark SQL, so refuse to open
+    if (!sess.sessionState.sqlParser.isInstanceOf[GraftSqlParser])
+      throw new GatewayException(
+        "Gateway needs spark.sql.extensions=graft.engine.GraftExtensions")
     // Spark 4.1 ships TIME behind a feature flag — DuckDB clients use
     // TIME literals/casts freely, so the dialect session turns it on
     // (closes the round-6 "TIME round-trips as VARCHAR" divergence)

@@ -359,17 +359,18 @@ object TimestampToTimeCast
     }
 }
 
-/** Read-only enforcement at the layer ALL SQL passes through (the
-  * session parser), not just Gateway.sql: Thrift/JDBC client statements
-  * go straight to `session.sql`, so a gateway-level check alone would
-  * let any network client run INSERT OVERWRITE DIRECTORY / CREATE TABLE
-  * (the reference serves its database access_mode=read_only,
-  * /root/reference/main.go:61 — D8 of SURVEY §2.12).
+/** The one read-only check, at the layer ALL SQL passes through (the
+  * session parser): Gateway.sql, Flight and Thrift/JDBC statements all
+  * parse here, so no network client can run INSERT OVERWRITE DIRECTORY /
+  * CREATE TABLE (the reference serves its database
+  * access_mode=read_only, /root/reference/main.go:61 — D8 of SURVEY
+  * §2.12). Statements Spark cannot parse (DuckDB-only verbs such as
+  * COPY … TO) fail in the parser and never run.
   *
-  * Classification is on the PARSED PLAN, not statement text: any
-  * non-command plan is a query (allowed); commands are allowed only from
-  * an explicit list (session/view/metadata commands, matching
-  * Gateway.readOnlyAllowed). Gated per-session by the
+  * Classification is on the PARSED PLAN, not statement text, so
+  * comments and parentheses cannot hide or fake a verb: any non-command
+  * plan is a query (allowed); commands are allowed only from an explicit
+  * list (session/view/metadata commands). Gated per-session by the
   * `spark.graft.readOnly` conf, which Serve sets and clients cannot
   * unset (SET of the flag itself is rejected).
   */
@@ -443,26 +444,24 @@ object ReadOnlyGuard {
   }
 }
 
-/** Delegating parser that applies Dialect.rewrite to whole statements.
-  * Identifier/expression/type fragments pass through untouched — the
-  * dialect shims are statement-level constructs. Also the read-only
-  * enforcement point (ReadOnlyGuard): every statement from every entry
-  * path — spark.sql, Gateway, Thrift/JDBC — parses here.
+/** Delegating parser that applies Dialect.rewrite to whole statements —
+  * the only place the rewrite runs. Identifier/expression/type fragments
+  * pass through untouched — the dialect shims are statement-level
+  * constructs. Also the read-only enforcement point (ReadOnlyGuard):
+  * every statement from every entry path — spark.sql, Gateway, Flight,
+  * Thrift/JDBC — parses here.
   */
 class GraftSqlParser(
     delegate: ParserInterface,
     session: Option[org.apache.spark.sql.SparkSession] = None)
   extends ParserInterface {
   override def parsePlan(sqlText: String): LogicalPlan = {
-    // rawifyLiterals LAST and exactly once (it is not idempotent):
-    // restores DuckDB's raw-literal semantics against Spark's lexer
-    val plan = delegate.parsePlan(
-      Dialect.rawifyLiterals(Dialect.rewrite(sqlText)))
+    val plan = delegate.parsePlan(GraftSqlParser.toSpark(sqlText))
     if (ReadOnlyGuard.active(session)) ReadOnlyGuard.enforce(plan)
     plan
   }
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(Dialect.rawifyLiterals(Dialect.rewrite(sqlText)))
+    delegate.parseQuery(GraftSqlParser.toSpark(sqlText))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =
@@ -477,4 +476,14 @@ class GraftSqlParser(
     delegate.parseDataType(sqlText)
   override def parseRoutineParam(sqlText: String): StructType =
     delegate.parseRoutineParam(sqlText)
+}
+
+object GraftSqlParser {
+  /** DuckDB statement text → the Spark SQL text this parser hands its
+    * delegate. rawifyLiterals LAST and exactly once (it is not
+    * idempotent): restores DuckDB's raw-literal semantics against
+    * Spark's lexer. Public for sessions built without GraftExtensions.
+    */
+  def toSpark(sqlText: String): String =
+    Dialect.rawifyLiterals(Dialect.rewrite(sqlText))
 }

@@ -19,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * One self-referencing CTE is supported (the common linear-recursion
   * shape); statements whose recursion is UNION ALL, or with no
   * self-reference at all, are NOT handled here — the caller passes them
-  * to Spark's native path. The scanner tracks single-/double-quote
-  * state and paren depth, so literals containing `UNION` or parens
-  * can't derail the split.
+  * to Spark's native path. Scanning goes through Dialect's lexer, so
+  * literals, quoted identifiers and comments containing `UNION`, parens
+  * or quotes can't derail the split.
   */
 object RecursiveSql {
 
@@ -30,76 +30,64 @@ object RecursiveSql {
   }
   final case class Parsed(ctes: Seq[Cte], outer: String)
 
-  private val prefixRe = """(?is)^\s*WITH\s+RECURSIVE\s""".r
+  private val prefixRe = """(?is)WITH\s+RECURSIVE\s""".r
 
-  def isRecursive(sql: String): Boolean = prefixRe.findFirstIn(sql).isDefined
+  /** Index just past a leading `WITH RECURSIVE`, after any comments. */
+  private def prefixEnd(sql: String): Option[Int] = {
+    val m = prefixRe.pattern.matcher(sql).region(Dialect.skipBlank(sql, 0), sql.length)
+    if (m.lookingAt()) Some(m.end) else None
+  }
 
-  /** Whole-word, quote-unaware reference check — CTE names are plain
-    * identifiers and a false positive inside a string literal only
-    * costs routing a statement down the (still correct) fixpoint path.
-    */
+  def isRecursive(sql: String): Boolean = prefixEnd(sql).isDefined
+
+  /** Whole-word reference to `name` outside literals, quoted
+    * identifiers and comments, at any depth. */
   private def refs(sql: String, name: String): Boolean =
-    ("""(?i)(?<![\w"])""" + java.util.regex.Pattern.quote(name) + """(?![\w"])""").r
-      .findFirstIn(sql).isDefined
+    Dialect.keywordMatches(sql,
+      ("(?i)" + java.util.regex.Pattern.quote(name) + """(?![\w"])""").r,
+      topLevel = false).nonEmpty
 
   /** Parse the CTE list and outer query. Returns None when the text
     * doesn't scan as a WITH RECURSIVE statement (caller falls back to
     * the native parser, which will produce the real error message).
     */
-  def parse(sql: String): Option[Parsed] = prefixRe.findFirstIn(sql).map { m =>
-    var i = m.length
+  def parse(sql: String): Option[Parsed] = prefixEnd(sql).map { start =>
+    var i = start
     val n = sql.length
-    def skipWs(): Unit = { while (i < n && sql(i).isWhitespace) i += 1 }
+    def skipBlank(): Unit = i = Dialect.skipBlank(sql, i)
     def ident(): String = {
-      skipWs()
+      skipBlank()
       val start = i
-      if (i < n && sql(i) == '"') { // quoted identifier
-        i += 1; while (i < n && sql(i) != '"') i += 1; i += 1
-        sql.substring(start + 1, i - 1)
-      } else {
-        while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
-        sql.substring(start, i)
-      }
+      val quoted = i < n && sql(i) == '"'
+      if (quoted) i = Dialect.consumeOpaque(sql, i, null)
+      else while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
+      if (quoted) sql.substring(start + 1, i - 1) else sql.substring(start, i)
     }
-    // scan from an opening paren to its match, honoring quotes
-    def parenBlock(): String = {
-      skipWs()
+    // an opening paren to its match → the comma-split contents and body
+    def parenBlock(): (Seq[String], String) = {
+      skipBlank()
       require(i < n && sql(i) == '(', s"expected '(' at $i")
-      val start = i + 1
-      var depth = 1; var sq = false; var dq = false
-      i += 1
-      while (i < n && depth > 0) {
-        val c = sql(i)
-        if (sq) { if (c == '\'') sq = false }
-        else if (dq) { if (c == '"') dq = false }
-        else c match {
-          case '\'' => sq = true
-          case '"' => dq = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      require(depth == 0, "unbalanced parens in WITH RECURSIVE")
-      sql.substring(start, i - 1)
+      val (parts, end) = Dialect.splitCallArgs(sql, i).getOrElse(
+        throw new IllegalArgumentException("unbalanced parens in WITH RECURSIVE"))
+      val body = sql.substring(i + 1, end - 1)
+      i = end
+      (parts, body)
     }
     val ctes = scala.collection.mutable.ArrayBuffer.empty[Cte]
     var more = true
     while (more) {
       val name = ident()
       require(name.nonEmpty, "expected CTE name")
-      skipWs()
+      skipBlank()
       val cols =
         if (i < n && sql(i) == '(')
-          parenBlock().split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+          parenBlock()._1.map(_.trim.stripPrefix("\"").stripSuffix("\""))
         else Seq.empty
-      skipWs()
+      skipBlank()
       require(sql.regionMatches(true, i, "AS", 0, 2), s"expected AS after CTE $name")
       i += 2
-      val body = parenBlock()
-      ctes += Cte(name, cols, body)
-      skipWs()
+      ctes += Cte(name, cols, parenBlock()._2)
+      skipBlank()
       if (i < n && sql(i) == ',') { i += 1 } else more = false
     }
     Parsed(ctes.toSeq, sql.substring(i).trim)
@@ -109,39 +97,13 @@ object RecursiveSql {
     * stays inside a branch — it's plain set union within seed or step).
     */
   private[engine] def unionBranches(body: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var sq = false; var dq = false
-    var i = 0; var last = 0
-    val n = body.length
-    while (i < n) {
-      val c = body(i)
-      if (sq) { if (c == '\'') sq = false; i += 1 }
-      else if (dq) { if (c == '"') dq = false; i += 1 }
-      else c match {
-        case '\'' => sq = true; i += 1
-        case '"' => dq = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case 'U' | 'u' if depth == 0 && body.regionMatches(true, i, "UNION", 0, 5) &&
-            (i == 0 || !body(i - 1).isLetterOrDigit && body(i - 1) != '_') &&
-            (i + 5 >= n || !body(i + 5).isLetterOrDigit && body(i + 5) != '_') =>
-          // peek past whitespace for ALL — that's a branch-internal union
-          var j = i + 5
-          while (j < n && body(j).isWhitespace) j += 1
-          if (body.regionMatches(true, j, "ALL", 0, 3) &&
-              (j + 3 >= n || !body(j + 3).isLetterOrDigit && body(j + 3) != '_')) {
-            i = j + 3
-          } else {
-            out += body.substring(last, i)
-            i += 5
-            last = i
-          }
-        case _ => i += 1
-      }
-    }
-    out += body.substring(last)
-    out.map(_.trim).toSeq
+    val cuts = Dialect.keywordMatches(body, bareUnionRe)
+    val starts = 0 +: cuts.map(_.end)
+    val ends = cuts.map(_.start) :+ body.length
+    starts.zip(ends).map { case (a, b) => body.substring(a, b).trim }
   }
+
+  private val bareUnionRe = """(?i)UNION\b(?!\s+ALL\b)""".r
 
   /** True when this statement needs the fixpoint path: exactly one
     * self-referencing CTE whose body splits on a top-level bare UNION.
@@ -159,7 +121,11 @@ object RecursiveSql {
     * two concurrent statements defining the same CTE name must not race
     * on the shared temp-view namespace.
     */
-  def run(session: SparkSession, p: Parsed, maxIter: Int = 200): DataFrame =
+  def run(session: SparkSession, p: Parsed, maxIter: Int = 200): DataFrame = {
+    // parse the outer statement first: the session parser's read-only
+    // guard refuses a write (WITH RECURSIVE … INSERT …) before any
+    // fixpoint job starts
+    session.sessionState.sqlParser.parsePlan(p.outer)
     session.synchronized {
       val rec = p.ctes.filter(_.selfRefs) match {
         case Seq(one) => one
@@ -204,4 +170,5 @@ object RecursiveSql {
         shadowed.foreach { case (nm, df) => df.createOrReplaceTempView(nm) }
       }
     }
+  }
 }

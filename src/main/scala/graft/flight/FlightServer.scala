@@ -30,9 +30,11 @@ import FlightProto._
   *  - `CommandGetSqlInfo` → the gateway's server-metadata table
   *    (main.go:169-193,203-224).
   *
-  * Write statements arrive through the same Gateway and are rejected by
-  * its read-only classification + the parser-level ReadOnlyGuard, so the
-  * Flight surface cannot bypass read-only enforcement.
+  * Write statements arrive through the same Gateway, whose statements
+  * all parse through the session parser's ReadOnlyGuard, so the Flight
+  * surface cannot bypass read-only enforcement. Prepared statements
+  * take their parameter count from the Gateway's placeholder scanner,
+  * the same one that binds them.
   */
 final class FlightServer(gateway: Gateway, port: Int) {
 
@@ -52,26 +54,6 @@ final class FlightServer(gateway: Gateway, port: Int) {
   private val preparedStmts =
     new java.util.concurrent.ConcurrentHashMap[String, PreparedEntry]()
 
-  /** Placeholder count = max($N) and/or number of `?`, outside quotes. */
-  private def placeholderCount(q: String): Int = {
-    var i = 0; var maxD = 0; var qs = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < q.length && q.charAt(j) != c) j += 1
-        i = j + 1
-      } else if (c == '$' && i + 1 < q.length && q.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < q.length && q.charAt(j).isDigit) j += 1
-        maxD = math.max(maxD, q.substring(i + 1, j).toInt)
-        i = j
-      } else if (c == '?') { qs += 1; i += 1 }
-      else i += 1
-    }
-    math.max(maxD, qs)
-  }
-
   /** Resolve a prepared handle to executable SQL: bound params if the
     * client DoPut them, else NULLs (the pre-bind GetFlightInfo schema
     * probe).
@@ -82,7 +64,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
       throw new GatewayException(s"unknown prepared statement handle: $key"))
     val params =
       if (entry.params.nonEmpty) entry.params
-      else Seq.fill(placeholderCount(entry.query))("NULL")
+      else Seq.fill(Gateway.placeholderCount(entry.query))("NULL")
     Gateway.bindPlaceholders(entry.query, params, Map.empty)
   }
 

@@ -101,6 +101,69 @@ class FlightSpec extends AnyFunSuite {
     assert(e.getMessage.contains("PERMISSION_DENIED"))
   }
 
+  test("DuckDB-only write verbs fail to parse: INVALID_ARGUMENT, nothing written") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-flight-ro").toFile
+    for (q <- Seq(s"COPY region TO '$tmp/r.parquet' (FORMAT PARQUET)",
+        s"EXPORT DATABASE '$tmp/db'", "DETACH remote")) {
+      val e = intercept[Exception](client.doGetSql(q))
+      assert(e.getMessage.contains("INVALID_ARGUMENT"), q)
+    }
+    assert(tmp.list().isEmpty)
+  }
+
+  test("prepared statements count placeholders outside comments") {
+    // one bound parameter each; a `?` or `$2` inside a comment is not a
+    // placeholder (DuckDB 1.0 answers both with EUROPE)
+    for (q <- Seq(
+        "SELECT r_name FROM region WHERE r_regionkey = ? /* why? */",
+        "SELECT r_name FROM region WHERE r_regionkey = $1 -- is $2 used?")) {
+      val r = preparedQuery(q, 3)
+      assert(r.rows.map(_.head.toString) == Seq("EUROPE"), q)
+    }
+  }
+
+  /** Flight SQL prepared statement over the wire: DoAction
+    * (CreatePreparedStatement), DoPut of a one-row parameter batch,
+    * GetFlightInfo, then DoGet of the returned ticket. */
+  private def preparedQuery(sql: String, param: Int): graft.flight.FlightResult = {
+    import org.sparkproject.connect.grpc.CallOptions
+    import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
+    import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}
+    import FlightProto._
+    val ch = NettyChannelBuilder.forAddress("localhost", server.boundPort)
+      .usePlaintext().build()
+    try {
+      val create = Action("CreatePreparedStatement", AnyMsg(
+        CreatePreparedStatementRequestUrl,
+        ActionCreatePreparedStatementRequest(sql).toBytes).toBytes)
+      val created = ClientCalls.blockingServerStreamingCall(ch,
+        FlightServer.Methods.doAction, CallOptions.DEFAULT, create.toBytes).next()
+      val handle = ActionCreatePreparedStatementResult.fromBytes(
+        AnyMsg.fromBytes(ActionResult.fromBytes(created).body).value).handle
+      val desc = FlightDescriptor(FlightDescriptor.CMD, AnyMsg(
+        PreparedStatementQueryUrl, CommandPreparedStatementQuery(handle).toBytes).toBytes)
+      val done = scala.concurrent.Promise[Unit]()
+      val put = ClientCalls.asyncBidiStreamingCall(
+        ch.newCall(FlightServer.Methods.doPut, CallOptions.DEFAULT),
+        new StreamObserver[Array[Byte]] {
+          override def onNext(v: Array[Byte]): Unit = ()
+          override def onError(t: Throwable): Unit = done.tryFailure(t)
+          override def onCompleted(): Unit = done.trySuccess(())
+        })
+      org.apache.spark.sql.GraftArrow.stream(gw.sql(s"SELECT $param AS p"), 10000)
+        .filterNot(FlightServer.isEos).zipWithIndex.foreach { case (c, i) =>
+          val (header, body) = FlightServer.splitIpc(c)
+          put.onNext(FlightData(header, body,
+            if (i == 0) Some(desc) else None).toBytes)
+        }
+      put.onCompleted()
+      scala.concurrent.Await.result(done.future,
+        scala.concurrent.duration.Duration(1, "minute"))
+      client.doGet(FlightInfo.fromBytes(ClientCalls.blockingUnaryCall(ch,
+        FlightServer.Methods.getFlightInfo, CallOptions.DEFAULT, desc.toBytes)))
+    } finally ch.shutdownNow()
+  }
+
   test("invalid SQL surfaces INVALID_ARGUMENT, not a broken stream") {
     val e = intercept[Exception](client.doGetSql("SELECT FROM WHERE"))
     assert(e.getMessage.contains("INVALID_ARGUMENT") ||

@@ -517,11 +517,37 @@ class GatewaySpec extends AnyFunSuite {
   }
 
   test("read-only gateway rejects writes before execution") {
-    val e = intercept[GatewayException] {
-      gw.sql("DROP TABLE lineitem")
+    // every write form is refused by the session parser's guard, the one
+    // read-only check, and leaves no trace
+    def exists(t: String) = gw.session.catalog.tableExists(t)
+    def regionRows = gw.sql("SELECT count(*) FROM region").collect()(0).getLong(0)
+    def refused(q: String): Unit = withClue(q) {
+      val e = intercept[GatewayException](gw.sql(q).collect())
+      assert(e.getMessage.contains("read-only"))
     }
-    assert(e.getMessage.contains("read-only"))
-    intercept[GatewayException](gw.sql("INSERT INTO orders VALUES (1)"))
+    refused("INSERT INTO region VALUES (9, 'X')")
+    refused("INSERT INTO orders VALUES (1)")
+    refused("DROP TABLE lineitem")
+    refused("CREATE TABLE ro_ctas AS SELECT 1 AS a")
+    refused("CACHE TABLE ro_cache AS SELECT 1 AS a")
+    refused("CACHE TABLE region")
+    refused("BEGIN CREATE TABLE ro_script AS SELECT 1 AS a; END")
+    refused("EXECUTE IMMEDIATE 'CREATE TABLE ro_ei AS SELECT 1 AS a'")
+    gw.sql("PREPARE ro_w AS CREATE TABLE ro_prep AS SELECT 1 AS a").collect()
+    refused("EXECUTE ro_w")
+    // the fixpoint path parses its outer statement before any job runs
+    val sc = gw.session.sparkContext
+    sc.setJobGroup("ro-recursive", "read-only recursive write")
+    try refused(
+      """WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n + 1 FROM r WHERE n < 3)
+        |INSERT INTO region SELECT n, 'x' FROM r""".stripMargin)
+    finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("ro-recursive").isEmpty)
+    assert(regionRows == 5L)
+    for (t <- Seq("ro_ctas", "ro_cache", "ro_script", "ro_ei", "ro_prep"))
+      assert(!exists(t), t)
+    assert(!gw.session.catalog.isCached("region"))
+    assert(exists("lineitem"))
     // views and SET remain allowed (reference init surface, k8s/main.yaml:107-133)
     gw.sql("CREATE OR REPLACE TEMP VIEW hello_world AS (SELECT 'hello' AS world)")
     assert(gw.sql("SELECT world FROM hello_world").collect()(0).getString(0) == "hello")
@@ -2132,5 +2158,43 @@ class GatewaySpec extends AnyFunSuite {
     def one(q: String): Any = gw.sql(q).collect()(0).get(0)
     assert(one("SELECT row_to_json(ROW(1,'x'))") == """{"":1,"":"x"}""")
     assert(one("SELECT json(ROW(1,ROW(2,'y')))") == """{"":1,"":{"":2,"":"y"}}""")
+  }
+
+  test("statements the text scanners used to mis-read answer like DuckDB 1.0") {
+    // every expected value is DuckDB 1.0's answer to the same text; the
+    // comments and parentheses sit where only a lexer-aware scan can
+    // tell them from statement text
+    val cases = Seq(
+      "(SELECT 1 AS a) UNION ALL (SELECT 2)" -> Seq("1", "2"),
+      "-- c\nSELECT 1 AS a" -> Seq("1"),
+      "/* hint */ SELECT 1 AS a" -> Seq("1"),
+      "SELECT 1 AS a -- UNION BY NAME is not used here" -> Seq("1"),
+      "SELECT 1 AS a /* UNION BY NAME */" -> Seq("1"),
+      "SELECT 1 AS a -- don't\nUNION BY NAME SELECT 2 AS a" -> Seq("1", "2"),
+      "WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n+1 FROM r WHERE n < 3 -- don't\n) SELECT * FROM r" ->
+        Seq("1", "2", "3"),
+      "SELECT * FROM region -- LIMIT 40%" -> Seq("0", "1", "2", "3", "4"),
+      "SELECT * FROM region LIMIT 40% -- forty" -> Seq("0", "1"))
+    for ((q, expected) <- cases)
+      withClue(q) {
+        assert(gw.sql(q).collect().map(_.get(0).toString).toSeq.sorted == expected)
+      }
+    gw.sql("PREPARE p_why AS SELECT ? AS a /* why? */").collect()
+    assert(gw.sql("EXECUTE p_why(7)").collect().map(_.getInt(0)).toSeq == Seq(7))
+  }
+
+  test("USE is accepted; DuckDB-only write verbs fail in the parser and write nothing") {
+    gw.sql("USE default").collect()
+    assert(gw.session.catalog.currentDatabase == "default")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ro").toFile
+    for (q <- Seq(
+        s"COPY region TO '${tmp}/region.parquet' (FORMAT PARQUET)",
+        s"COPY (SELECT * FROM region) TO '${tmp}/q.csv'",
+        s"EXPORT DATABASE '${tmp}/db'",
+        "DETACH remote"))
+      withClue(q) {
+        intercept[org.apache.spark.sql.catalyst.parser.ParseException](gw.sql(q))
+      }
+    assert(tmp.list().isEmpty)
   }
 }

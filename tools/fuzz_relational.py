@@ -15,6 +15,12 @@ only appear with multiple partitions (partial-agg ordering, window
 partition boundaries, shuffle-dependent DECIMAL sums) are in the sweep.
 At scale the generator adds orders/lineitem window+agg shapes whose
 inputs genuinely span partitions; every query stays fully ORDER BY-ed.
+
+A seeded half of the queries (drawn from a second generator, so the query
+set itself does not change with this) is sent with a leading block comment
+and a trailing line comment that hold quotes, `?`, UNION BY NAME and a
+LIMIT n%. Both engines get the same text, so results must still match: a
+text scan in the engine that is blind to comments shows up as a diff.
 """
 import json, math, random, subprocess, sys
 from pathlib import Path
@@ -450,9 +456,12 @@ def main():
 
     kept, duck_rows = [], []
     tries = 0
+    comment_rng = random.Random(seed)
     while len(kept) < n and tries < n * 30:
         tries += 1
         q = gen(rng)
+        if comment_rng.random() < 0.5:
+            q = f"/* it's (a) UNION BY NAME? */ {q} -- don't? UNION BY NAME LIMIT 1%"
         try:
             rows = con.sql(q).fetchall()
         except Exception:
