@@ -115,8 +115,8 @@ object Dialect {
     * desynchronize them. `$1`/`$name` prepared-statement params don't
     * match (no closing `$`).
     */
-  /** Gateway's PREPARE capture normalizes dollar quotes before the
-    * placeholder binder ever sees the text.
+  /** Gateway.sql folds dollar quotes on entry, so its statement
+    * matchers and PREPARE's placeholder binder see '…' literals only.
     */
   private[engine] def normalizeDollarQuotes(sql: String): String =
     rewriteDollarQuotes(sql)
@@ -2520,6 +2520,23 @@ object Dialect {
       }
     }
     i
+  }
+
+  /** `sql` without its trailing whitespace and comments — the mirror
+    * of skipBlank. An unterminated block comment is kept, so it still
+    * fails to parse.
+    */
+  private[engine] def trimTrailingBlank(sql: String): String = {
+    var end = 0
+    var i = 0
+    while (i < sql.length) {
+      val next = math.max(consumeOpaque(sql, i, null), i + 1)
+      val blank = sql.charAt(i).isWhitespace || sql.startsWith("--", i) ||
+        (sql.startsWith("/*", i) && next >= i + 4 && sql.startsWith("*/", next - 2))
+      if (!blank) end = next
+      i = next
+    }
+    sql.substring(0, end)
   }
 
   /** Scan positions outside string literals, quoted identifiers, and SQL

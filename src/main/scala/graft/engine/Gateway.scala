@@ -103,8 +103,11 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
   def sql(text: String): DataFrame = {
     val preVar = text.trim
-    // statement shapes are matched past any leading comments
-    val bare = preVar.substring(Dialect.skipBlank(preVar, 0))
+    // statement shapes are matched past leading and trailing comments,
+    // with dollar quotes already folded to '…' literals so the lexer
+    // (and PREPARE's placeholder binder) never reads inside one
+    val bare = Dialect.trimTrailingBlank(Dialect.normalizeDollarQuotes(
+      preVar.substring(Dialect.skipBlank(preVar, 0))))
     // DuckDB 1.1 session variables (SURVEY §5.3): SET VARIABLE
     // evaluates its expression EAGERLY through the full pipeline and
     // stores the result as SQL literal text; getvariable('x') is then
@@ -187,10 +190,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // read-only classification applies to the BOUND statement.
     trimmed match {
       case prepareRe(name, body) =>
-        // normalize dollar-quoted literals NOW: the binder runs before
-        // the dialect pipeline and would read `$$v$$` as a `$v` param
-        prepared.put(name.toLowerCase,
-          Dialect.normalizeDollarQuotes(body.trim))
+        prepared.put(name.toLowerCase, body.trim)
         return success
       case executeRe(name, argText) =>
         return this.sql(bindPrepared(name, Option(argText)))
@@ -929,12 +929,14 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
   /** Substitute `args` for `params` in `body` at identifier boundaries,
     * outside string literals; each value is parenthesized (textual
-    * macro hygiene, same effect as DuckDB's expression binding).
+    * macro hygiene, same effect as DuckDB's expression binding), the
+    * closing paren on its own line so a trailing `--` comment in the
+    * value cannot swallow it.
     */
   private def substituteParams(
       body: String, bind: Map[String, String]): String =
     mapWords(body) { (i, j) =>
-      bind.get(body.substring(i, j).toLowerCase).map(v => (s"($v)", j))
+      bind.get(body.substring(i, j).toLowerCase).map(v => (s"($v\n)", j))
     }
 
   /** Rewrite the identifier words of `sql` that lie outside literals,
@@ -973,7 +975,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         macros.get(word).filter(_ => budget > 0 && (i == 0 || text.charAt(i - 1) != '.'))
           .flatMap(m => Dialect.splitCallArgs(text, j).map { case (args, end) =>
             budget -= 1
-            ("(" + substituteParams(m.body, macroBind(word, m, args)) + ")", end)
+            ("(" + substituteParams(m.body, macroBind(word, m, args)) + "\n)", end)
           })
       }
     }

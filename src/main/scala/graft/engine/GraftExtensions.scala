@@ -1,10 +1,13 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Session extensions installing the DuckDB dialect at the PARSER level
@@ -12,6 +15,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `spark.sql`, the Gateway, and Thrift/JDBC client sessions that never
   * pass through Gateway.sql — gets the same text rewrites (QUALIFY,
   * `//`, GLOB, `->>`, catalog table functions; Dialect.rewrite).
+  *
+  * One physical rule rides along: ParamLiterals, through
+  * `injectColumnar`. Its `preColumnarTransitions` runs before
+  * CollapseCodegenStages, both in QueryExecution's preparations and in
+  * AQE's post-stage-creation rules, so every codegen stage sees it.
+  * Spark's Literal codegen inlines primitive values (int, bigint,
+  * double, date, timestamp, …) into the generated Java, so
+  * `WHERE o_orderkey = 17` and `= 18` are different sources: each one
+  * misses CodeGenerator's cache, costs a Janino compile and loads a
+  * fresh class for the JIT. The rule turns those constants, inside
+  * FilterExec conditions only, into ParamLiteral leaves that codegen
+  * reads from `references`, so statements that differ only in key
+  * values compile once. It leaves alone the logical plan, the scan's
+  * dataFilters and the parquet pushdown built from them (they keep
+  * real Literals), NULLs, and non-primitive literals (strings and
+  * decimals already go through `references`).
   *
   * Activate with
   * `spark.sql.extensions=graft.engine.GraftExtensions` (config-only, the
@@ -49,6 +68,47 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // UBIGINT counters wrap under negation in DuckDB; the engine
     // refuses loudly instead of silently answering -n
     ext.injectResolutionRule(_ => UnsignedWrapGuard)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
+  }
+}
+
+/** A primitive constant whose generated code reads its value from the
+  * codegen context's `references` into a field, once, when the
+  * generated object is built — the same Java source for every value.
+  * Otherwise it is the Literal it wraps: same value, type, equality,
+  * canonical form (exchange and subquery reuse still tell two values
+  * apart) and rendering in plans.
+  */
+case class ParamLiteral(lit: Literal) extends LeafExpression {
+  override def dataType: DataType = lit.dataType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = true
+  override def eval(input: InternalRow): Any = lit.value
+  override def toString: String = lit.toString
+  override def sql: String = lit.sql
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("param", lit.value, CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "param",
+      v => s"$v = $ref.${javaType}Value();", forceInline = true)
+    ExprCode.forNonNullValue(JavaCode.global(field, dataType))
+  }
+}
+
+/** Physical rule: every non-null primitive Literal in a FilterExec
+  * condition becomes a ParamLiteral (see GraftExtensions for why).
+  * Idempotent — a ParamLiteral is not a Literal — so AQE may re-apply
+  * it to plans it already rewrote.
+  */
+object ParamLiterals extends Rule[SparkPlan] {
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f: FilterExec => f.transformExpressions {
+      case l: Literal if l.value != null && CodeGenerator.isPrimitiveType(l.dataType) =>
+        ParamLiteral(l)
+    }
   }
 }
 

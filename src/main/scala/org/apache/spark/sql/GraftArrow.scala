@@ -22,12 +22,17 @@ object GraftArrow {
     */
   def stream(df: Dataset[Row], maxRecordsPerBatch: Int): Iterator[Array[Byte]] = {
     val classic = df.asInstanceOf[ClassicDataFrame]
-    // toArrowBatchRdd sizes batches from the session conf — honor the
-    // caller's request (gateway sessions are per-client, so this is
-    // client-scoped state)
-    classic.sparkSession.conf.set(
-      "spark.sql.execution.arrow.maxRecordsPerBatch", maxRecordsPerBatch.toString)
-    val batches = classic.toArrowBatchRdd.toLocalIterator
+    val conf = classic.sparkSession.sessionState.conf
+    val schema = classic.schema
+    val timeZoneId = conf.sessionLocalTimeZone
+    val largeVarTypes = conf.arrowUseLargeVarTypes
+    val batches = classic.queryExecution.executedPlan.execute()
+      .mapPartitionsInternal { rows =>
+        org.apache.spark.sql.execution.arrow.ArrowConverters.toBatchIterator(
+          rows, schema, maxRecordsPerBatch.toLong, timeZoneId,
+          errorOnDuplicatedFieldNames = true, largeVarTypes,
+          org.apache.spark.TaskContext.get())
+      }.toLocalIterator
     Iterator(schemaIpc(df)) ++ batches ++ Iterator(EOS)
   }
 

@@ -60,6 +60,15 @@ class FlightSpec extends AnyFunSuite {
     assert(r.batchCount >= 1)
   }
 
+  test("DoGet leaves the session's arrow batch size as the client SET it") {
+    val key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    gw.sql(s"SET $key = 123").collect()
+    try {
+      assert(client.doGetSql("SELECT 1 AS a").rows == Seq(Seq(1)))
+      assert(gw.session.conf.get(key) == "123")
+    } finally gw.sql(s"RESET $key").collect()
+  }
+
   test("GetSchema decodes to the analyzed schema's field names") {
     val s = client.getSchema("SELECT o_orderdate, o_totalprice FROM orders")
     val schema = org.apache.arrow.vector.ipc.message.MessageSerializer

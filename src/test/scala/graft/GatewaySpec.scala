@@ -2197,4 +2197,189 @@ class GatewaySpec extends AnyFunSuite {
       }
     assert(tmp.list().isEmpty)
   }
+
+  test("Gateway-only statements are matched past trailing comments") {
+    assert(gw.sql("PRAGMA version -- x").collect().length == 1)
+    assert(gw.sql("SUMMARIZE nation -- x").collect().map(_.getString(0)).toSeq ==
+      Seq("n_nationkey", "n_name", "n_regionkey"))
+    gw.sql("SET VARIABLE tc_v = 6 * 7 -- x").collect()
+    assert(gw.sql("SELECT getvariable('tc_v') AS v").collect().head.get(0).toString == "42")
+    gw.sql("RESET VARIABLE tc_v /* x */").collect()
+    gw.sql("PREPARE tc_p AS SELECT $1 + 1 AS v -- x").collect()
+    assert(gw.sql("EXECUTE tc_p(6) /* x */").collect().head.get(0).toString == "7")
+    gw.sql("DEALLOCATE tc_p -- x").collect()
+    intercept[GatewayException](gw.sql("EXECUTE tc_p(6)"))
+    // an unterminated block comment is not blank: it still fails to parse
+    intercept[Exception](gw.sql("SELECT 1 AS a /* x").collect())
+  }
+
+  test("macro expansion keeps its closing parens after a line comment") {
+    gw.sql("CREATE MACRO mc_add1(x) AS x + 1 -- add one\n;").collect()
+    try {
+      assert(gw.sql("SELECT mc_add1(2) * 10 AS v").collect().head.getInt(0) == 30)
+      assert(gw.sql("SELECT mc_add1(2 -- two\n) * 10 AS v").collect().head.getInt(0) == 30)
+    } finally gw.sql("DROP MACRO mc_add1").collect()
+  }
+
+  /** Six rows of every primitive column type at its edges (row 5 holds
+    * the NaNs and NULLs), plus a DECIMAL and a STRING column, as parquet
+    * so that served filters run as a FilterExec over a real scan.
+    */
+  private lazy val ptypes: String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-params").resolve("t").toString
+    Seq[(String, String, String, String, String, String, String, String, String, String)](
+      ("0", "-2147483648", "-9223372036854775808", "-32768", "-128", "-Infinity",
+        "1900-01-01", "1900-01-01 00:00:00", "-1.50", "a"),
+      ("1", "-1", "-1", "-1", "-1", "-0.0",
+        "1969-12-31", "1969-12-31 23:59:59.999999", "-0.01", "b"),
+      ("2", "0", "0", "0", "0", "0.0",
+        "1970-01-01", "1970-01-01 00:00:00", "0.00", "c"),
+      ("3", "1", "1", "1", "1", "1.5",
+        "2024-02-29", "2024-02-29 12:34:56.789", "1.50", "d"),
+      ("4", "2147483647", "9223372036854775807", "32767", "127", "Infinity",
+        "9999-12-31", "9999-12-31 23:59:59.999999", "99999999.99", "e"),
+      ("5", null, null, null, null, "NaN", null, null, null, null))
+      .toDF("id", "i", "b", "s", "t", "d", "dt", "ts", "dec", "str")
+      .selectExpr("CAST(id AS INT) AS id", "CAST(i AS INT) AS i", "CAST(b AS BIGINT) AS b",
+        "CAST(s AS SMALLINT) AS s", "CAST(t AS TINYINT) AS t", "CAST(d AS DOUBLE) AS d",
+        "CAST(d AS FLOAT) AS r", "CAST(dt AS DATE) AS dt", "CAST(ts AS TIMESTAMP) AS ts",
+        "CAST(ts AS TIMESTAMP_NTZ) AS tn", "CAST(dec AS DECIMAL(10, 2)) AS dec", "str")
+      .write.parquet(dir)
+    gw.session.read.parquet(dir).createOrReplaceTempView("ptypes")
+    "ptypes"
+  }
+
+  /** The served statement's physical plan: the data types of the
+    * ParamLiterals in its FilterExecs, and the whole-stage source of the
+    * codegen stage holding the filter.
+    */
+  private def filterStage(q: String): (Seq[org.apache.spark.sql.types.DataType], String) = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, WholeStageCodegenExec}
+    val plan = gw.sql(q).queryExecution.executedPlan
+    // the scan's pushed filters keep their real Literals
+    val scanFilters = plan.collect { case s: FileSourceScanExec => s.dataFilters }.flatten
+    assert(scanFilters.exists(_.exists(_.isInstanceOf[Literal])) &&
+      !scanFilters.exists(_.exists(_.isInstanceOf[graft.engine.ParamLiteral])), plan)
+    val params = plan.collect { case f: FilterExec =>
+      f.condition.collect { case p: graft.engine.ParamLiteral => p.dataType }
+    }.flatten
+    val sources = plan.collect {
+      case w: WholeStageCodegenExec if w.exists(_.isInstanceOf[FilterExec]) =>
+        w.doCodeGen()._2.body
+    }
+    assert(sources.size == 1, plan)
+    (params, sources.head)
+  }
+
+  test("served statements differing only in a filter key share one whole-stage source") {
+    import org.apache.spark.sql.types._
+    val cases = Seq(
+      ("i", IntegerType, "1", "-2147483648"),
+      ("b", LongType, "1", "9223372036854775807"),
+      ("s", ShortType, "CAST(1 AS SMALLINT)", "CAST(-32768 AS SMALLINT)"),
+      ("t", ByteType, "CAST(1 AS TINYINT)", "CAST(127 AS TINYINT)"),
+      ("d", DoubleType, "CAST(1.5 AS DOUBLE)", "CAST('NaN' AS DOUBLE)"),
+      ("r", FloatType, "CAST(1.5 AS REAL)", "CAST('-Infinity' AS REAL)"),
+      ("dt", DateType, "DATE '2024-02-29'", "DATE '1969-12-31'"),
+      ("ts", TimestampType, "CAST('2024-02-29 12:34:56' AS TIMESTAMP)",
+        "CAST('1969-12-31 23:59:59.999999' AS TIMESTAMP)"),
+      ("tn", TimestampNTZType, "TIMESTAMP_NTZ '2024-02-29 12:34:56'",
+        "TIMESTAMP_NTZ '1900-01-01 00:00:00'"))
+    for ((c, t, k1, k2) <- cases)
+      withClue(s"$c: ") {
+        val (p1, src1) = filterStage(s"SELECT id FROM $ptypes WHERE $c = $k1")
+        val (p2, src2) = filterStage(s"SELECT id FROM $ptypes WHERE $c = $k2")
+        assert(p1 == Seq(t) && p2 == Seq(t))
+        assert(src1 == src2)
+      }
+  }
+
+  test("parameterized filter constants return the right rows at the type edges") {
+    // expected ids follow Spark and DuckDB alike: NaN equals NaN and sorts
+    // above +Infinity, -0.0 equals 0.0, NULL matches no comparison
+    val cases = Seq(
+      "i = -2147483648" -> Seq(0), "i >= 2147483647" -> Seq(4), "i < 0" -> Seq(0, 1),
+      "i <> 0" -> Seq(0, 1, 3, 4),
+      "b = CAST(-9223372036854775808 AS BIGINT)" -> Seq(0),
+      "b = 9223372036854775807" -> Seq(4), "b > -1" -> Seq(2, 3, 4),
+      "s = CAST(-32768 AS SMALLINT)" -> Seq(0), "s >= CAST(32767 AS SMALLINT)" -> Seq(4),
+      "t = CAST(-128 AS TINYINT)" -> Seq(0), "t > CAST(1 AS TINYINT)" -> Seq(4),
+      "d = CAST('NaN' AS DOUBLE)" -> Seq(5), "d > CAST('Infinity' AS DOUBLE)" -> Seq(5),
+      "d = CAST('-0.0' AS DOUBLE)" -> Seq(1, 2), "d = CAST('-Infinity' AS DOUBLE)" -> Seq(0),
+      "d < CAST('-0.0' AS DOUBLE)" -> Seq(0),
+      "r = CAST('NaN' AS REAL)" -> Seq(5), "r = CAST('Infinity' AS REAL)" -> Seq(4),
+      "r = CAST('-0.0' AS REAL)" -> Seq(1, 2), "r = CAST(1.5 AS REAL)" -> Seq(3),
+      "dt = DATE '1969-12-31'" -> Seq(1), "dt < DATE '1970-01-01'" -> Seq(0, 1),
+      "dt = DATE '1900-01-01'" -> Seq(0),
+      "ts = CAST('1969-12-31 23:59:59.999999' AS TIMESTAMP)" -> Seq(1),
+      "ts < CAST('1970-01-01 00:00:00' AS TIMESTAMP)" -> Seq(0, 1),
+      "tn = TIMESTAMP_NTZ '1900-01-01 00:00:00'" -> Seq(0),
+      "tn > TIMESTAMP_NTZ '2024-02-29 12:34:56'" -> Seq(3, 4),
+      // stay real Literals, and still filter right
+      "dec = 1.50" -> Seq(3), "str = 'e'" -> Seq(4), "i IS NOT DISTINCT FROM NULL" -> Seq(5))
+    for ((pred, ids) <- cases)
+      withClue(pred) {
+        assert(gw.sql(s"SELECT id FROM $ptypes WHERE $pred").collect()
+          .map(_.getInt(0)).toSeq.sorted == ids)
+      }
+  }
+
+  test("ParamLiterals rewrites only non-null primitive filter literals") {
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.types.{Decimal, IntegerType}
+    import graft.engine.{ParamLiteral, ParamLiterals}
+    val child = gw.session.range(1).queryExecution.executedPlan
+    def params(l: Literal) =
+      ParamLiterals(FilterExec(EqualTo(l, l), child)).expressions
+        .flatMap(_.collect { case p: ParamLiteral => p })
+    for (l <- Seq(Literal(null, IntegerType), Literal(Decimal(1.5)), Literal("x")))
+      withClue(l) { assert(params(l).isEmpty) }
+    for (l <- Seq(Literal(1), Literal(1L), Literal(1.5), Literal(1.5f), Literal(true),
+        Literal(1.toShort), Literal(1.toByte)))
+      withClue(l) { assert(params(l) == Seq(ParamLiteral(l), ParamLiteral(l))) }
+    // two values never compare or canonicalize equal
+    val (one, two) = (ParamLiteral(Literal(1)), ParamLiteral(Literal(2)))
+    assert(one != two && one.canonicalized != two.canonicalized)
+    assert(one.toString == "1" && one.eval(null) == 1)
+  }
+
+  test("exchange and subquery reuse keep two filter keys apart") {
+    val Array(k1, k2) = gw.sql(
+      """SELECT min(o_orderkey) AS k1, max(o_orderkey) AS k2 FROM orders
+        |GROUP BY o_custkey HAVING count(*) > 1 ORDER BY o_custkey LIMIT 1""".stripMargin)
+      .collect().head.toSeq.map(_.toString).toArray
+    def keys(q: String) =
+      gw.sql(q).collect().map(_.toSeq.map(_.toString).mkString(",")).toSeq.sorted
+    assert(keys(s"""SELECT o_orderkey FROM orders WHERE o_orderkey = $k1
+                   |UNION ALL SELECT o_orderkey FROM orders WHERE o_orderkey = $k2""".stripMargin)
+      == Seq(k1, k2).sorted)
+    assert(keys(s"""SELECT (SELECT max(o_orderkey) FROM orders WHERE o_orderkey = $k1) AS a,
+                   |(SELECT max(o_orderkey) FROM orders WHERE o_orderkey = $k2) AS b""".stripMargin)
+      == Seq(s"$k1,$k2"))
+    // a shuffled self-join (no broadcast) under AQE: both sides read
+    // orders through the same plan shape, differing only in the key
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    gw.sql(s"SET $key = -1").collect()
+    try {
+      val df = gw.sql(
+        s"""SELECT a.o_orderkey AS ka, b.o_orderkey AS kb
+           |FROM (SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey = $k1) a
+           |JOIN (SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey = $k2) b
+           |ON a.o_custkey = b.o_custkey""".stripMargin)
+      assert(df.collect().map(r => s"${r.get(0)},${r.get(1)}").toSeq == Seq(s"$k1,$k2"))
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("AdaptiveSparkPlan") &&
+        plan.toString.contains("hashpartitioning"), plan)
+      // AQE's stage rules applied the rewrite too: one parameter per side
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val params = aqe.collect(plan) {
+        case f: org.apache.spark.sql.execution.FilterExec =>
+          f.condition.collect { case p: graft.engine.ParamLiteral => p.lit.value.toString }
+      }.flatten
+      assert(params.sorted == Seq(k1, k2).sorted, plan)
+    } finally gw.sql(s"RESET $key").collect()
+  }
 }

@@ -16,6 +16,11 @@ partition boundaries, shuffle-dependent DECIMAL sums) are in the sweep.
 At scale the generator adds orders/lineitem window+agg shapes whose
 inputs genuinely span partitions; every query stays fully ORDER BY-ed.
 
+After the n queries come n/4 more of shape 19 (`--shape=19` sends n of
+them alone): `WHERE <numeric/date/timestamp column> <op> <literal>` over
+orders, lineitem and events, with literals at the type edges (NaN, -0.0,
++/-Infinity, INT/BIGINT bounds, pre-epoch dates and timestamps).
+
 A seeded half of the queries (drawn from a second generator, so the query
 set itself does not change with this) is sent with a leading block comment
 and a trailing line comment that hold quotes, `?`, UNION BY NAME and a
@@ -447,6 +452,85 @@ def main():
                 f"JOIN region ON n_regionkey = r_regionkey "
                 f"GROUP BY r_name ORDER BY r_name ASC NULLS LAST")
 
+    # shape 19: WHERE <numeric/date/timestamp column> <op> <literal> at
+    # the type edges (NaN, -0.0, +/-Infinity, BIGINT/INT bounds, pre-epoch
+    # dates and timestamps) plus in-range keys. The engine turns these
+    # filter constants into codegen parameters, so a value that codegen
+    # reads back wrong shows up here as a diff against DuckDB.
+    int_lits = ["0", "1", "-1", "2147483647", "-2147483648",
+                "9223372036854775807", "CAST(-9223372036854775808 AS BIGINT)"]
+    dbl_lits = ["CAST('NaN' AS DOUBLE)", "CAST('Infinity' AS DOUBLE)",
+                "CAST('-Infinity' AS DOUBLE)", "CAST('-0.0' AS DOUBLE)",
+                "CAST(0.0 AS DOUBLE)", "CAST(1.5 AS DOUBLE)"]
+    real_lits = ["CAST('NaN' AS REAL)", "CAST('Infinity' AS REAL)",
+                 "CAST('-Infinity' AS REAL)", "CAST('-0.0' AS REAL)",
+                 "CAST(1.5 AS REAL)"]
+    date_lits = ["DATE '1969-12-31'", "DATE '1900-01-01'", "DATE '1970-01-01'",
+                 "DATE '1995-01-01'", "DATE '2024-01-15'", "DATE '9999-12-31'"]
+    ts_lits = ["TIMESTAMP '1969-12-31 23:59:59.999999'",
+               "TIMESTAMP '1900-01-01 00:00:00'", "TIMESTAMP '1970-01-01 00:00:00'",
+               "TIMESTAMP '1995-01-01 00:00:00'", "TIMESTAMP '2024-01-15 12:00:00'"]
+    # table -> (ordering key, [(column expression, literal pool, in-range literal)])
+    filter_cols = {
+        "orders": ("o_orderkey", [
+            ("o_orderkey", int_lits, lambda r: str(r.randrange(1500))),
+            ("o_custkey", int_lits, lambda r: str(r.randrange(100))),
+            ("CAST(o_orderkey AS INTEGER)", int_lits[:5], lambda r: str(r.randrange(1500))),
+            ("CAST(o_orderkey % 1000 AS SMALLINT)",
+             ["CAST(-32768 AS SMALLINT)", "CAST(32767 AS SMALLINT)", "CAST(0 AS SMALLINT)"],
+             lambda r: f"CAST({r.randrange(1000)} AS SMALLINT)"),
+            ("CAST(o_custkey % 100 AS TINYINT)",
+             ["CAST(-128 AS TINYINT)", "CAST(127 AS TINYINT)", "CAST(0 AS TINYINT)"],
+             lambda r: f"CAST({r.randrange(100)} AS TINYINT)"),
+            ("o_totalprice", dbl_lits, lambda r: f"CAST({r.randrange(900, 500000)}.5 AS DOUBLE)"),
+            ("CAST(o_totalprice AS REAL)", real_lits,
+             lambda r: f"CAST({r.randrange(900, 500000)}.5 AS REAL)"),
+            ("o_orderdate", ts_lits,
+             lambda r: f"TIMESTAMP '{r.randrange(1995, 2002)}-0{r.randrange(1, 10)}-1{r.randrange(10)} 00:00:00'"),
+            ("CAST(o_orderdate AS DATE)", date_lits,
+             lambda r: f"DATE '{r.randrange(1995, 2002)}-0{r.randrange(1, 10)}-1{r.randrange(10)}'"),
+        ]),
+        "lineitem": ("l_orderkey, l_linenumber", [
+            ("l_linenumber", int_lits[:5], lambda r: str(r.randrange(1, 8))),
+            ("l_quantity", dbl_lits, lambda r: f"CAST({r.randrange(1, 50)} AS DOUBLE)"),
+            ("l_discount", dbl_lits, lambda r: f"CAST(0.0{r.randrange(10)} AS DOUBLE)"),
+            ("CAST(l_extendedprice AS REAL)", real_lits,
+             lambda r: f"CAST({r.randrange(900, 100000)}.25 AS REAL)"),
+            ("l_shipdate", ts_lits,
+             lambda r: f"TIMESTAMP '{r.randrange(1995, 2002)}-0{r.randrange(1, 10)}-2{r.randrange(9)} 00:00:00'"),
+            ("CAST(l_shipdate AS DATE)", date_lits,
+             lambda r: f"DATE '{r.randrange(1995, 2002)}-0{r.randrange(1, 10)}-2{r.randrange(9)}'"),
+        ]),
+        "events": ("event_id", [
+            ("event_id", int_lits, lambda r: str(r.randrange(1000))),
+            ("user_id", int_lits, lambda r: str(r.randrange(15))),
+            ("value", dbl_lits, lambda r: f"CAST({r.randrange(100)}.5 AS DOUBLE)"),
+            ("ts", ts_lits,
+             lambda r: f"TIMESTAMP '2024-01-{r.randrange(10, 31)} {r.randrange(10, 24)}:00:00'"),
+            ("CAST(ts AS DATE)", date_lits, lambda r: f"DATE '2024-01-{r.randrange(10, 31)}'"),
+        ]),
+    }
+
+    def gen_filter(rng):
+        t = rng.choice(sorted(filter_cols))
+        key, cols = filter_cols[t]
+
+        def pred():
+            col, lits, in_range = rng.choice(cols)
+            lit = in_range(rng) if rng.random() < 0.3 else rng.choice(lits)
+            op = rng.choice(["=", "<>", "<", "<=", ">", ">="])
+            return f"{col} {op} {lit}"
+
+        where = pred()
+        if rng.random() < 0.3:
+            where = f"({where}) {rng.choice(['AND', 'OR'])} ({pred()})"
+        first = key.split(",")[0]
+        if rng.random() < 0.5:
+            return (f"SELECT count(*) AS c, min({first}) AS lo, max({first}) AS hi, "
+                    f"sum({first}) AS s FROM {t} WHERE {where}")
+        order = ", ".join(f"{k.strip()} ASC" for k in key.split(","))
+        return f"SELECT {key} FROM {t} WHERE {where} ORDER BY {order} LIMIT 50"
+
     con = duckdb.connect()
     for t in ["nation", "region", "lineitem", "orders", "events"]:
         p = Path(SF) / f"{t}.parquet"
@@ -455,19 +539,31 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
     kept, duck_rows = [], []
+
+    def keep(q):
+        try:
+            rows = con.sql(q).fetchall()
+        except Exception:
+            return
+        kept.append(q)
+        duck_rows.append(rows)
+
     tries = 0
     comment_rng = random.Random(seed)
-    while len(kept) < n and tries < n * 30:
+    while pin_shape != 19 and len(kept) < n and tries < n * 30:
         tries += 1
         q = gen(rng)
         if comment_rng.random() < 0.5:
             q = f"/* it's (a) UNION BY NAME? */ {q} -- don't? UNION BY NAME LIMIT 1%"
-        try:
-            rows = con.sql(q).fetchall()
-        except Exception:
-            continue
-        kept.append(q)
-        duck_rows.append(rows)
+        keep(q)
+    # shape 19 rides on its own generator, after the others, so the
+    # queries above stay the same for a seed: n/4 more, or n when pinned
+    filter_rng = random.Random(seed + 19)
+    n_filter = n if pin_shape == 19 else 0 if pin_shape is not None else n // 4
+    target = len(kept) + n_filter
+    while len(kept) < target and tries < (n + n_filter) * 30:
+        tries += 1
+        keep(gen_filter(filter_rng))
 
     work = Path("/tmp/fuzz_rel")
     work.mkdir(exist_ok=True)
